@@ -132,6 +132,49 @@ object Bench {
     else None
   }
 
+  /** The prior run's committed BENCH_FULL.json as the gate reads it:
+    * (full-name per-query seconds, scan MB/s, multi-task probe
+    * seconds). Throws on a file that is not JSON. */
+  private[graft] def readPrior(path: java.nio.file.Path): (Map[String, Double], Double, Double) = {
+    import scala.jdk.CollectionConverters._
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Files.readString(path))
+    (root.path("queries").properties().asScala
+      .map(e => e.getKey -> e.getValue.asDouble(0)).toMap,
+      root.path("scan").path("parquet_mb_per_sec").asDouble(0),
+      root.path("scan").path("mt_sec").asDouble(0))
+  }
+
+  /** Run `body`; a failure is printed to stderr and returned as a
+    * one-line message (`"<what>: <exception>"`) for the BENCH_FULL.json
+    * `gate_error` field, so a broken gate is visible, never silent. */
+  private[graft] def recordFailure[T](what: String)(body: => T): Option[String] =
+    try { body; None } catch { case e: Throwable =>
+      System.err.println(s"[bench-diff] $what failed"); e.printStackTrace(); Some(s"$what: $e")
+    }
+
+  /** The full-name BENCH_FULL.json line; `gate_error` is null when the
+    * regression gate ran clean. Lifecycle rows are deliberately-heavy
+    * persisted-state PROOFS whose weight is the point: they stay in
+    * `queries` (totalled and gated), and the `lifecycle` rollup lets
+    * per-query statistics separate them from real queries. */
+  private[graft] def fullLine(results: Map[String, Double], scan: String,
+                              sfDir: String, gateError: Option[String]): String = {
+    val total = results.values.sum
+    val full = results.toSeq.sortBy(_._1)
+      .map { case (k, v) => "\"" + k + "\":" + f3(v) }
+      .mkString("{", ",", "}")
+    val lifecycleKeys = Seq("q000_graph_build", "q302_lifecycle_capstone")
+      .filter(results.contains)
+    val lifecycle = lifecycleKeys
+      .map(k => "\"" + k + "\":" + f3(results(k)))
+      .mkString("{", ",", "}")
+    val lifecycleSec = lifecycleKeys.map(results).sum
+    val err = gateError.fold("null")(
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(_))
+    s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$full,"lifecycle":$lifecycle,"lifecycle_sec":${f3(lifecycleSec)},"scan":$scan,"sf":"$sfDir","gate_error":$err}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -148,12 +191,6 @@ object Bench {
       .config("spark.cleaner.periodicGC.interval", "30s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // dev-only: "k=v;k2=v2" session confs (e.g. the presentationSort
-    // elision) for A/B timing; the driver never sets it
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
 
     def drain(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
@@ -275,31 +312,25 @@ object Bench {
     // before the threshold test — the round-7 driver rerun of an
     // identical HEAD flagged six queries purely because the whole
     // machine ran ~25% slower; a gate that cries wolf under load masks
-    // real regressions. Emitted to BENCH_DIFF.md + stderr only: stdout
-    // stays one driver-parseable JSON line.
+    // real regressions. Emitted to BENCH_DIFF.md + stderr only (a gate
+    // that itself fails is recorded as BENCH_FULL.json's gate_error):
+    // stdout stays one driver-parseable JSON line.
     // A run at a different scale than the committed baseline (e.g. the
     // round-10 BENCH_sf1 pass, redirected via SPARK_GRAFT_BENCH_OUT)
     // must neither diff against it (a 10x corpus "regresses" every
     // query) nor overwrite it.
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-    if (nameFilter.isEmpty) try {
+    val gateError = if (nameFilter.isEmpty) recordFailure("regression gate") {
       val priorPath = java.nio.file.Paths.get("BENCH_FULL.json")
       if (java.nio.file.Files.exists(priorPath) && benchOut == "BENCH_FULL.json") {
-        val m = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = m.readTree(java.nio.file.Files.readString(priorPath))
-        val node = root.path("queries")
-        val priorMb = root.path("scan").path("parquet_mb_per_sec").asDouble(0)
+        val (priorQ, priorMb, priorMt) = readPrior(priorPath)
         val curMb = bytes / 1e6 / scanSec
-        val priorMt = root.path("scan").path("mt_sec").asDouble(0)
         // two probe dimensions, worst wins, clamped at 1 (loadFactor,
         // spec-pinned): this burstable box degrades single-task decode
         // and multi-task scheduling independently (round-8/9
         // adjudication — 211 → 90 MB/s single-task across consecutive
         // runs, multi-task contention at single-task load 1.00)
         val load = loadFactor(priorMb, curMb, priorMt, mtSec)
-        import scala.jdk.CollectionConverters._
-        val priorQ = node.properties().asScala
-          .map(e => e.getKey -> e.getValue.asDouble(0)).toMap
         // every flag row is adjudicated IN-PROCESS before the diff is
         // written: min-of-4 re-execution, verdict column appended (see
         // [[adjudicate]]); q000_graph_build has no registry body to
@@ -332,34 +363,17 @@ object Bench {
           ("# Bench regression gate\n\n" + body).getBytes("UTF-8"))
         flags.foreach(f => System.err.println(s"[bench-diff] $f"))
       }
-    } catch { case _: Throwable => () }
+    } else None
 
     val qs = compactQueries(results)
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val full = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    // lifecycle rows: deliberately-heavy persisted-state PROOFS (build
-    // three states, hash-compare against the full corpus) whose weight
-    // is the point, not a plan defect. They stay in `queries` (counted
-    // in the total, gated like everything else) — this tag lets
-    // per-query regression statistics separate them from real queries,
-    // and their rollup makes the proof overhead visible at a glance.
-    val lifecycleKeys = Seq("q000_graph_build", "q302_lifecycle_capstone")
-      .filter(results.contains)
-    val lifecycle = lifecycleKeys
-      .map(k => "\"" + k + "\":" + f3(results(k)))
-      .mkString("{", ",", "}")
-    val lifecycleSec = lifecycleKeys.map(results).sum
-    val fullLine =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$full,"lifecycle":$lifecycle,"lifecycle_sec":${f3(lifecycleSec)},"scan":$scan,"sf":"$sfDir"}"""
     // only a full (unfiltered) run may overwrite the committed artifact —
     // a dev-filtered run would clobber it with a partial query map
-    if (nameFilter.isEmpty) try {
+    if (nameFilter.isEmpty) recordFailure(s"write $benchOut") {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(benchOut),
-        (fullLine + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // best-effort; cwd may be read-only
+        (fullLine(results, scan, sfDir, gateError) + "\n").getBytes("UTF-8"))
+    }
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"scan":$scan,"sf":"$sfDir"}""")
     graft.llm.Dedup.clearShingleCache()
     spark.stop()

@@ -168,7 +168,6 @@ object Compact {
     * recovery contract. Returns None when no state exists. */
   def readClassIndex(spark: SparkSession,
                      stateDir: String): Option[(DataFrame, DataFrame)] = {
-    requireDefaultClassKey()
     resolveRoot(spark, stateDir).map { root =>
       val v = detectFormat(fs(spark, stateDir), root)
       if (v != FormatVersion) throw new IllegalStateException(
@@ -179,23 +178,6 @@ object Compact {
       (spark.read.parquet(new Path(root, "classes").toString),
         spark.read.parquet(new Path(root, "members").toString))
     }
-  }
-
-  /** Guard at every persisted-state entry point: the Compact v2 index
-    * is KEYED on the default [[graft.llm.Dedup.classKey]] encoding, and
-    * [[graft.llm.Dedup.classKeyVariant]] is a process-global probe
-    * switch — a CollapseProbe `classkey:` leg naming a Compact-backed
-    * query would otherwise merge persisted state under a foreign key
-    * encoding and silently split every content class in two (round-13
-    * ADVICE). Probe encodings stay legal for the stateless in-memory
-    * paths; touching disk state demands the shipped key. */
-  private def requireDefaultClassKey(): Unit = {
-    val v = graft.llm.Dedup.classKeyVariant
-    if (v != "legacy12") throw new IllegalStateException(
-      s"Compact state access with probe classKeyVariant '$v': the " +
-        "persisted v2 index is keyed on the default encoding and mixing " +
-        "variants would split every content class — reset " +
-        "Dedup.classKeyVariant before touching Compact state")
   }
 
   /** Read the live index as the PER-DOCUMENT view
@@ -228,7 +210,6 @@ object Compact {
   def run(spark: SparkSession, stateDir: String, batch: DataFrame,
           shingleK: Int = 3, bands: Int = 32, rowsPerBand: Int = 4,
           textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    requireDefaultClassKey()
     val f = fs(spark, stateDir)
     // single-writer enforcement (the GraphArtifact/AnnIndex round-10
     // lease): two concurrent compactions would interleave the

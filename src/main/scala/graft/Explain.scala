@@ -16,13 +16,6 @@ object Explain {
       s"usage: Explain <queryName> [sfDir]; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    // optional 3rd arg "persist": print the plan under the pre-round-15
-    // persist-based materialization (the tolerant/dedup checkpoint
-    // switches), so before/after plan dumps come from one binary
-    if (args.length > 2 && args(2) == "persist") {
-      graft.llm.Similarity.tolerantCheckpoint = false
-      graft.llm.Dedup.dedupCheckpoint = false
-    }
     val fn = SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(
         s"unknown query $name; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))

@@ -29,7 +29,7 @@ object Tables {
     * normalize to the same session-zone TIMESTAMP the queries and the
     * DuckDB oracle agree on, decided by the file's actual schema. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Memoize the ANALYZED frame per (session, path, file mtime+size) —
+    // Memoize the ANALYZED frame per (session, path, [[stamp]]) —
     // metadata only: `spark.read.parquet` costs ~50 ms per call (driver
     // file listing + footer schema inference), and the bench constructs
     // every query body per rep — ~40 s of pure metadata work across a
@@ -40,8 +40,7 @@ object Tables {
     // catalog-table pattern, keyed on the file stat so a rewritten
     // fixture (ScaleGen/SfGen re-runs, test temp dirs) invalidates.
     val path = s"$dir/$name.parquet"
-    val f = new java.io.File(path)
-    val key = (spark, path, f.lastModified(), f.length())
+    val key = (spark, path, stamp(path))
     val hit = cache.get(key)
     if (hit != null) hit
     else {
@@ -59,7 +58,27 @@ object Tables {
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Long, Long), DataFrame]()
+      (SparkSession, String, Stamp), DataFrame]()
+
+  /** A table's sorted leaf files, their total bytes and newest mtime
+    * (ns). A directory's own length is its inode size, and its mtime can
+    * sit still through a rewrite inside the timestamp granularity. */
+  private type Stamp = (Seq[String], Long, Long)
+
+  private def stamp(path: String): Stamp = {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.BasicFileAttributes
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(path)
+    // a missing table keeps Spark's own "path does not exist" error
+    if (!Files.exists(root)) return (Nil, 0L, 0L)
+    val walk = Files.walk(root)
+    val leaves = try walk.iterator().asScala
+      .map(p => root.relativize(p).toString -> Files.readAttributes(p, classOf[BasicFileAttributes]))
+      .filter(_._2.isRegularFile).toSeq finally walk.close()
+    (leaves.map(_._1).sorted, leaves.map(_._2.size).sum,
+      leaves.map(_._2.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)).foldLeft(0L)(math.max))
+  }
 
   /** The single definition of the events `ts` fixup, shared with the
     * streaming reader so batch and stream can never desynchronize on a

@@ -217,6 +217,7 @@ object WriterLease {
         "treat it as stale (that would break a live holder); inspect " +
         "and delete the file manually if it is corrupt")
     val (holder, stale) = raw match {
+      case Some("") => ("", false) // a contender's create is mid-write: held
       case Some(r) =>
         try parseLease(r)
         catch { case _: java.io.IOException => unreadable() } // corrupt JSON

@@ -585,6 +585,39 @@ case class JaccardExpr(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+object LengthPrefixKernel {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** `<chars>:<element>` per element, nulls kept: exactly
+    * `transform(a, s -> concat(length(s), ':', s))`. */
+  def compute(arr: ArrayData): ArrayData =
+    new GenericArrayData(Array.tabulate[Any](arr.numElements()) { i =>
+      if (arr.isNullAt(i)) null
+      else {
+        val s = arr.getUTF8String(i)
+        UTF8String.concat(UTF8String.fromString(s"${s.numChars}:"), s)
+      }
+    })
+}
+
+/** array<string> → array<string> length-prefixed elements (see
+  * [[LengthPrefixKernel]]), the lambda-free form of a `transform`. An
+  * interpreted lambda (`transform`, `array_sort`'s comparator) keeps its
+  * current element in state on the expression, so two driver threads
+  * constant-folding one local-relation plan read each other's rows. */
+case class LengthPrefixExpr(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeCheck.expect(
+    prettyName, GraftTypeCheck.isStringArray(child.dataType), "ARRAY<STRING>", child.dataType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def prettyName: String = "length_prefix"
+  override protected def nullSafeEval(input: Any): Any =
+    LengthPrefixKernel.compute(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.LengthPrefixKernel.compute($c)")
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** Column-level entry points for the custom expressions. */
 object Hashing {
   def minhashSignature(c: Column, numPerms: Int): Column =
@@ -607,6 +640,8 @@ object Hashing {
     GraftBridge.column(GramHashesExpr(GraftBridge.expression(c), n))
   def jaccardSimHashed(a: Column, b: Column): Column =
     GraftBridge.column(JaccardLongExpr(GraftBridge.expression(a), GraftBridge.expression(b)))
+  def lengthPrefix(c: Column): Column =
+    GraftBridge.column(LengthPrefixExpr(GraftBridge.expression(c)))
   def rollingChunks(c: Column, minChunk: Int, mask: Long): Column =
     GraftBridge.column(RollingChunksExpr(GraftBridge.expression(c), minChunk, mask))
 }

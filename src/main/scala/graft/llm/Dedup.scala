@@ -35,19 +35,12 @@ object Dedup {
       lastShingleCaches = next
     }
 
-  /** Switch for the dedup family's working-set materialization: eager
-    * `localCheckpoint` vs the pre-round-15 MEMORY_AND_DISK `persist`
-    * (kept so [[graft.QProbe]] can interleave the two in one process —
-    * the [[graft.llm.Similarity.tolerantCheckpoint]] instrument).
-    * Checkpointed working sets are freed by the ContextCleaner after
-    * driver GC rather than by [[swapShingleCaches]]' unpersist — the
-    * bench's 30 s periodic GC + per-16-queries System.gc bound the
-    * lingering blocks (the IterFrame / CC-loop discipline). */
-  @volatile private[graft] var dedupCheckpoint = true
-
-  private[llm] def matD(df: DataFrame): DataFrame =
-    if (dedupCheckpoint) df.localCheckpoint(true)
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** The dedup family's working-set materialization: an eager
+    * `localCheckpoint` (beat `persist` in OPTIMIZATION_r15.md), freed
+    * by the ContextCleaner after driver GC, not by
+    * [[swapShingleCaches]]' unpersist — the bench's periodic GC bounds
+    * the lingering blocks (the IterFrame / CC-loop discipline). */
+  private[llm] def matD(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** Degenerate mass dropped so far this session by the opt-in size cap
     * ([[Lsh.MaxBucketConf]]): oversized LSH BUCKETS and, since the
@@ -78,41 +71,13 @@ object Dedup {
     * distinct classes merge only if both hashes collide
     * simultaneously. */
   private[graft] def classKey(arr: Column): Column = {
-    val sorted = array_sort(arr)
-    if (classKeyVariant == "r11")
-      // probe-only reconstruction of the PRE-injectivity round-11 key
-      // (bare separator join, aliasable -- never ship)
-      return struct(md5(concat_ws("\u0001", sorted)),
-        xxhash64(concat_ws("\u0001", sorted)), size(sorted))
-    val h1 =
-      if (classKeyVariant == "cheap")
-        // probe-only alternative: md5 over comma-joined DECIMAL
-        // renderings of per-element xxhash64 values (injective in the
-        // per-element hash sequence; aliasing needs a simultaneous
-        // collision of a fixed-seed element hash AND the chained
-        // structural hash). Built as the round-13 candidate fix for
-        // the q59/q136 close regressions; the interleaved min-of-4
-        // A/B measured it EQUAL to the shipped encoding (and to the
-        // r11 bare form) at sf0.1 -- the regression was box load, not
-        // the encoding -- so the shipped key keeps the strictly
-        // stronger unconditional-injectivity encoding below and the
-        // persisted index format stays v2 (SCALE.md round-13).
-        md5(concat_ws(",", transform(sorted, s => xxhash64(s).cast("string"))))
-      else
-        md5(concat_ws("\u0001",
-          transform(sorted, s => concat(length(s).cast("string"), lit(":"), s))))
+    // lambda-free on purpose: see [[graft.functions.LengthPrefixExpr]].
+    // Both hashes skip null elements, so sort_array's nulls-first order
+    // cannot change a key.
+    val sorted = sort_array(arr)
+    val h1 = md5(concat_ws("\u0001", graft.functions.Hashing.lengthPrefix(sorted)))
     struct(h1, xxhash64(sorted), size(sorted))
   }
-
-  /** Probe-only switch to alternative [[classKey]] encodings ("r11" =
-    * the pre-injectivity bare-separator form, "cheap" = per-element
-    * hashes), so [[graft.CollapseProbe]]'s `classkey` mode can
-    * interleave the variants inside ONE process (min-of-N,
-    * load-cancelling). NOT a tuning knob: the default is the only
-    * supported encoding -- [[graft.Compact]] state is keyed on it
-    * (format v2), flipping it against a live index would split every
-    * persisted content class in two, and "r11" is outright aliasable. */
-  @volatile private[graft] var classKeyVariant: String = "legacy12"
 
   /** Exact dedup: group by content fingerprint, keep the smallest doc_id
     * as canonical. One map-side-combinable shuffle on the 128-bit hash. */

@@ -612,26 +612,15 @@ object Similarity {
     * parameters see the derived value without re-deriving it. */
   val TolerantAutoBitsConf = "spark.graft.srp.tolerant.autoBits"
 
-  /** Switch for the tolerant family's intermediate materialization:
-    * eager `localCheckpoint` (the round-15 default — row blocks +
-    * lineage truncation, so every consumer replans against a tiny
-    * `Scan ExistingRDD` instead of the full cached subtree) vs
-    * `persist` (MEMORY_AND_DISK columnar cache, the round-13/14 form,
-    * kept so [[graft.QProbe]] can interleave the two in one process).
-    * Measured interleaved min-of-N at sf0.1/local[32] (round 15):
-    * q305 5.71 → 2.62 s, q306 4.98 → 2.53 s, q307 6.45 → 2.83 s — the
-    * persist form spent the time in cache-manager planning of the
-    * ~3600-line cached subtrees plus per-consumer InMemoryTableScan
-    * jobs (54 jobs per q305 execution). Same storage class
-    * (MEMORY_AND_DISK), same recompute-from-parquet-per-execution
-    * contract; the trade is losing recompute-on-eviction (a lost block
-    * fails the job instead of recomputing), the trade [[graft.common
-    * .IterFrame]] and the CC/census family already accepted. */
-  @volatile private[graft] var tolerantCheckpoint = true
-
-  private def mat(df: DataFrame): DataFrame =
-    if (tolerantCheckpoint) df.localCheckpoint(true)
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** The tolerant family's intermediate materialization: an eager
+    * `localCheckpoint`, so every consumer replans against a tiny
+    * `Scan ExistingRDD`. It beat the round-13/14 MEMORY_AND_DISK
+    * `persist` interleaved min-of-N at sf0.1/local[32] (round 15):
+    * q305 5.71 → 2.62 s, q306 4.98 → 2.53 s, q307 6.45 → 2.83 s, the
+    * persist form planning ~3600-line cached subtrees plus 54
+    * InMemoryTableScan jobs per q305. The trade: a lost block fails the
+    * job instead of recomputing, as in [[graft.common.IterFrame]]. */
+  private def mat(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** The [[srpTolerantPairs]] auto bit-width rule — the round-13 drift
     * ladder's finding encoded the way `bucketedServe=auto` encoded its

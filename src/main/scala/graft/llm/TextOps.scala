@@ -27,9 +27,10 @@ object TextOps {
     * DISTINCT token set — shuffled near-copies still collide. Shared by
     * q110 (incremental dedup) and q171 (cluster canonical pick); the
     * DuckDB twin is [[graft.queries.Fragments.BagFpSql]] and MUST stay
-    * in lockstep. */
+    * in lockstep. `sort_array`: lambda-free, see
+    * [[graft.functions.LengthPrefixExpr]]. */
   def bagFingerprint(text: Column): Column =
-    md5(concat_ws(" ", array_sort(array_distinct(tokens(text)))))
+    md5(concat_ws(" ", sort_array(array_distinct(tokens(text)))))
 
   /** Distinct word k-shingles (k consecutive tokens joined by a space) of
     * the normalized text; empty when the document has fewer than k tokens.

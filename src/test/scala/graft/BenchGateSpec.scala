@@ -91,4 +91,22 @@ class BenchGateSpec extends AnyFunSuite {
     // empty intersection -> None, not a divide-by-zero
     assert(Bench.totalDriftFlag(Map("x" -> 1.0), Map("y" -> 1.0), 1.0).isEmpty)
   }
+
+  test("an unparsable prior BENCH_FULL.json is recorded as gate_error, not dropped") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val prior = java.nio.file.Files.createTempFile("bench-full", ".json")
+    val scan = """{"rows":10,"sec":0.1,"rows_per_sec":100,"parquet_mb_per_sec":200.0,"mt_sec":0.02}"""
+    try {
+      java.nio.file.Files.writeString(prior, "{\"queries\": {\"q01_x\": 1.0,")
+      val err = Bench.recordFailure("regression gate")(Bench.readPrior(prior))
+      assert(err.exists(_.startsWith("regression gate: ")), err)
+      val line = json.readTree(Bench.fullLine(Map("q01_x" -> 1.5), scan, "sf", err))
+      assert(line.path("gate_error").asText() === err.get)
+      // a clean gate records null; the line still reads back as a prior
+      val clean = Bench.fullLine(Map("q01_x" -> 1.5), scan, "sf", None)
+      assert(json.readTree(clean).path("gate_error").isNull)
+      java.nio.file.Files.writeString(prior, clean)
+      assert(Bench.readPrior(prior) === ((Map("q01_x" -> 1.5), 200.0, 0.02)))
+    } finally java.nio.file.Files.delete(prior)
+  }
 }

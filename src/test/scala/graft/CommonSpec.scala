@@ -48,6 +48,29 @@ class CommonSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(m)
   }
 
+  test("Tables.t sees a directory table rewritten under an unchanged directory stat") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toFile
+    val table = new java.io.File(dir, "fixture.parquet")
+    def rows = Tables.t(spark, dir.getPath, "fixture").as[Long].collect().sorted.toSeq
+    try {
+      Seq(1L, 2L).toDF("k").coalesce(1).write.parquet(table.getPath)
+      assert(rows === Seq(1L, 2L))
+      val (len, mtime) = (table.length(), table.lastModified())
+      Seq(3L, 4L).toDF("k").coalesce(1).write.mode("overwrite").parquet(table.getPath)
+      // a rewrite inside the filesystem's timestamp granularity: the
+      // directory's own length and mtime read exactly as before
+      assert(table.setLastModified(mtime))
+      assert(table.length() === len)
+      assert(rows === Seq(3L, 4L))
+    } finally {
+      def go(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(go)); f.delete(); ()
+      }
+      go(dir)
+    }
+  }
+
   // InputTest.checkGets parity (reference input/InputTest.java:175-190):
   // wrong-typed access must throw, not silently coerce
   test("wrong-typed dataset access fails at analysis") {
@@ -270,6 +293,22 @@ class CommonSpec extends AnyFunSuite {
     assert(leftovers.isEmpty, s"a mismatching release must not shed scratch: $leftovers")
     WriterLease.release(fs, lease, nonceB)
     assert(!fs.exists(lease))
+  }
+
+  test("WriterLease: an empty lease is a create in flight, never stale evidence") {
+    // CREATE_NEW makes the file before its bytes land; a contender that
+    // read it empty parsed it as expired and broke the fresh lease
+    // (the two-stale-contenders race below admitted two writers)
+    import graft.common.WriterLease
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    val dir = java.nio.file.Files.createTempDirectory("lease-empty")
+    val lease = java.nio.file.Files.createFile(dir.resolve("w.lease"))
+    intercept[IllegalStateException] {
+      WriterLease.acquire(fs, new org.apache.hadoop.fs.Path(lease.toString), owner = "c@host")
+    }
+    assert(java.nio.file.Files.size(lease) === 0, "the in-flight lease must be left alone")
+    assert(dir.toFile.list().toSeq === Seq("w.lease"), "no tombstone may be claimed")
   }
 
   test("WriterLease.forceRelease: the named cross-process cleanup deletes unconditionally") {

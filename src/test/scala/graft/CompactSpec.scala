@@ -46,36 +46,55 @@ class CompactSpec extends AnyFunSuite {
     } finally rm(state)
   }
 
-  test("probe classKey variants are refused at every persisted-state entry point") {
-    // classKeyVariant is a process-global PROBE switch and the v2
-    // index is keyed on the default encoding — a CollapseProbe
-    // `classkey:` leg naming a Compact-backed query would otherwise
-    // merge state under a foreign key and silently split every
-    // content class (round-13 ADVICE). Both the writer and the reader
-    // refuse before touching disk; the in-memory derivation stays
-    // legal (the probe's actual use).
+  test("Compact.run indexes a driver-built createDataFrame corpus") {
+    // a local-relation frame is constant-folded on the driver, by
+    // several threads at once inside Compact.run's parallel writes;
+    // the key's lambdas raced there (array_sort: "Comparison method
+    // violates its general contract" from ConvertToLocalRelation;
+    // transform: class keys that members and classes disagree on)
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(11)
+    val texts = (0 until 2000).map(_ =>
+      Seq.fill(12)(s"w${rnd.nextInt(300)}").mkString(" "))
+    // every tenth doc a shuffled copy of its predecessor: real classes
+    val rows = texts.zipWithIndex.map { case (t, i) =>
+      val text = if (i % 10 == 9) rnd.shuffle(texts(i - 1).split(" ").toSeq).mkString(" ") else t
+      Row(i.toLong, text)
+    }
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    val corpus = spark.createDataFrame(rows.asJava, schema)
     val state = tmpState()
     try {
-      Compact.run(spark, state, base)
-      for (variant <- Seq("r11", "cheap")) {
-        Dedup.classKeyVariant = variant
-        try {
-          val exR = intercept[IllegalStateException] {
-            Compact.readClassIndex(spark, state)
-          }
-          assert(exR.getMessage.contains(variant))
-          val exW = intercept[IllegalStateException] {
-            Compact.run(spark, state, batch)
-          }
-          assert(exW.getMessage.contains(variant))
-          // stateless in-memory path stays legal under the probe key
-          val (classes, _) = Compact.classIndexOf(batch)
-          assert(classes.count() > 0)
-        } finally Dedup.classKeyVariant = "legacy12"
-      }
-      // back at the default, the state is intact and serves
-      assert(Compact.readClassIndex(spark, state).isDefined)
+      Compact.run(spark, state, corpus)
+      assert(indexRows(state).map(_._1) === (0L until 2000L).toSet)
     } finally rm(state)
+  }
+
+  test("lambda-free keys equal the array_sort/transform keys they replace, nulls and duplicates included") {
+    // Compact v2 state and the DuckDB twin Fragments.BagFpSql were
+    // written under the lambda forms: the keys must not move
+    def oldClassKey(arr: org.apache.spark.sql.Column) = {
+      val sorted = array_sort(arr)
+      struct(md5(concat_ws("\u0001",
+        transform(sorted, s => concat(length(s).cast("string"), lit(":"), s)))),
+        xxhash64(sorted), size(sorted))
+    }
+    val arrays = Seq(Seq("b", "a", null), Seq(null, "a", "b"), Seq("a", "a", "b"),
+      Seq.empty[String], null, Seq(null: String), Seq(null, null, "z", "z"),
+      Seq("x\u0001y", "z"), Seq("z", "x\u0001y"), Seq("ü", "日本", ""))
+    val keys = arrays.map(Tuple1(_)).toDF("a")
+      .select(oldClassKey(col("a")), Dedup.classKey(col("a"))).collect()
+    assert(keys.length === arrays.size)
+    keys.foreach(r => assert(r.get(0) === r.get(1)))
+    val texts = Seq("b a a", "a b", "  B\tA  ", "", null, "z y x y")
+    texts.map(Tuple1(_)).toDF("text").select(
+      md5(concat_ws(" ", array_sort(array_distinct(
+        graft.llm.TextOps.tokens(col("text")))))),
+      graft.llm.TextOps.bagFingerprint(col("text")))
+      .collect().foreach(r => assert(r.get(0) === r.get(1)))
   }
 
   test("compaction upserts: a re-indexed id's row is replaced, others survive") {

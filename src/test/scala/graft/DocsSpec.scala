@@ -52,4 +52,31 @@ class DocsSpec extends AnyFunSuite {
     assert(read("SCALE.md").contains(s"for all $n registered quer"),
       "SCALE.md 'for all N registered queries'")
   }
+
+  test("README's Layout names every main, and README names no graft object that is gone") {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val sources = try walk.iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".scala")).map(read).toList finally walk.close()
+    val Decl = """\b(?:object|class|trait)\s+(\w+)""".r
+    val mains = sources.flatMap { src =>
+      var owner = ""
+      src.linesIterator.flatMap { l =>
+        // mains live on top-level objects (column 0)
+        """^(?:private\S*\s+)?object\s+(\w+)""".r
+          .findFirstMatchIn(l).foreach(m => owner = m.group(1))
+        if (l.contains("def main(args: Array[String])")) Some(owner) else None
+      }.toList
+    }
+    assert(mains.contains("Bench") && mains.contains("ConfOptionsCmd"), mains)
+    val readme = read("README.md")
+    val start = readme.indexOf("## Layout")
+    val layout = readme.substring(start, readme.indexOf("\n## ", start))
+    val missing = mains.filterNot(m => s"\\b$m\\b".r.findFirstIn(layout).isDefined)
+    assert(missing.isEmpty, s"README Layout must name every main: missing $missing")
+    val declared = sources.flatMap(Decl.findAllMatchIn(_).map(_.group(1))).toSet
+    val stale = """graft\.(?:[a-z]\w*\.)*([A-Z]\w*)""".r.findAllMatchIn(readme)
+      .map(_.group(1)).filterNot(declared).toList
+    assert(stale.isEmpty, s"README names graft objects that no longer exist: $stale")
+  }
 }

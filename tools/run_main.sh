@@ -2,7 +2,8 @@
 # Launch a graft main OUTSIDE sbt (keeps the sbt server free for tests)
 # with the full Java-17 --add-opens set Spark 4 needs on this JDK —
 # without java.base/java.nio Kryo dies on spilled checkpoint blocks.
-# Usage: tools/run_main.sh graft.ScaleProbe <args...>
+# Usage: tools/run_main.sh graft.TruthCheck <args...>
+# (the measured multi-scale timings this was built for are in SCALE.md)
 cd /root/repo
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
